@@ -27,14 +27,27 @@ object Cleaning {
   /** F2 — synonym-column merge: collapse variant columns into a canonical
     * one via coalesce (the 19 renames, challenge2.py:44-65; coalesce rather
     * than rename is the faithful set semantics when both variants carry
-    * data — SURVEY.md §2 F2). */
-  def mergeSynonyms(df: DataFrame, canonicalToVariants: Map[String, Seq[String]]): DataFrame =
-    canonicalToVariants.foldLeft(df) { case (d, (canon, variants)) =>
-      val present = (canon +: variants).filter(d.columns.contains).distinct
-      if (present.isEmpty) d
-      else d.withColumn(canon, coalesce(present.map(qcol): _*))
-        .drop(present.filterNot(_ == canon): _*)
+    * data — SURVEY.md §2 F2). Entries apply in the map's iteration order
+    * and each sees the merges before it ("Original release" is both a
+    * canonical key and a variant of "Release date"). A canonical column
+    * keeps its position or, if absent, is appended. The fold runs over
+    * (name, Column) pairs and emits one projection: a `withColumn` +
+    * `drop` per entry would re-analyse the whole wide plan each time. */
+  def mergeSynonyms(df: DataFrame, canonicalToVariants: Map[String, Seq[String]]): DataFrame = {
+    val cols = canonicalToVariants.foldLeft(df.columns.toVector.map(c => c -> qcol(c))) {
+      case (cs, (canon, variants)) =>
+        val byName = cs.toMap
+        val present = (canon +: variants).filter(byName.contains).distinct
+        if (present.isEmpty) cs
+        else {
+          val merged = canon -> coalesce(present.map(byName): _*)
+          val kept = cs.filterNot { case (n, _) => n != canon && present.contains(n) }
+          if (byName.contains(canon)) kept.map(nc => if (nc._1 == canon) merged else nc)
+          else kept :+ merged
+        }
     }
+    df.select(cols.map { case (n, c) => c.as(n) }: _*)
+  }
 
   /** Dictionary (categorical) encoding: build the (value → dense id)
     * dictionary from the column's distinct values in lexicographic order

@@ -14,10 +14,22 @@ object IO {
   /** A1 — semi-structured JSON array scan: one multiline JSON document per
     * file, ragged keys become nullable columns (the 193-key union,
     * exploratory_data_analysis.ipynb:1851-2043). Explicit schema wins at
-    * scale; inference stays an ingest capability. */
+    * scale; inference stays an ingest capability.
+    *
+    * Each file is read as ONE in-memory record: the record separator is
+    * NUL, which valid JSON never contains raw. Schema, rows and the text
+    * of list-valued cells in string columns are those of the `multiLine`
+    * reader, but the `multiLine` reader parses from a stream and re-reads
+    * the file (one positioned read, i.e. a re-open on a checksummed
+    * filesystem or a ranged GET on an object store) for every non-string
+    * token it keeps as exact text; from a byte record that text is a
+    * slice. Limits: a file must fit in one Hadoop `Text` record (< 2 GB),
+    * and `multiLine` already holds every row of the top-level array at
+    * once; the file must be UTF-8 (RFC 8259), since the separator is
+    * matched as a zero byte, which UTF-16/32 text contains. */
   def readJsonArray(spark: SparkSession, path: String,
                     schema: Option[StructType] = None): DataFrame = {
-    val r = spark.read.option("multiLine", true)
+    val r = spark.read.option("lineSep", "\u0000")
     schema.fold(r)(r.schema).json(path)
   }
 
@@ -32,23 +44,10 @@ object IO {
   def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.option("header", true).schema(schema).csv(path)
 
-  /** A4 — "chunked" scan: in Spark, partitioned execution is the default;
-    * the knob that bounds per-task memory is the input split size. The 1M-
-    * row chunk loop (challenge2.py:295-298) becomes a partition-size hint. */
-  def readCsvChunked(spark: SparkSession, path: String, schema: StructType,
-                     maxPartitionBytes: Long = 128L << 20): DataFrame = {
-    spark.conf.set("spark.sql.files.maxPartitionBytes", maxPartitionBytes.toString)
-    readCsv(spark, path, schema)
-  }
-
-  /** A5 — parquet scan (our fixture path; TESTDATA.md). */
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /** A6 — JDBC sink, full replace (to_sql name='movies',
-    * exploratory_data_analysis.ipynb:6437). No database ships in this
-    * sandbox, so this is exercised only through its API surface; verify
-    * outputs go to parquet. */
+    * exploratory_data_analysis.ipynb:6437). Exercised end to end against
+    * embedded Derby (JdbcSinkSpec, and the load step of the `etl_movies`
+    * benchmark workload). */
   def writeJdbcReplace(df: DataFrame, url: String, table: String,
                        props: java.util.Properties = new java.util.Properties): Unit =
     df.write.mode(SaveMode.Overwrite).jdbc(url, table, props)
@@ -63,10 +62,6 @@ object IO {
     props.setProperty("batchsize", batchSize.toString)
     df.repartition(numPartitions).write.mode(SaveMode.Append).jdbc(url, table, props)
   }
-
-  /** Parquet sink (the verify path). */
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
 
   /** Compacting parquet sink: bound the OUTPUT FILE COUNT so downstream
     * scans see few large files instead of many small ones — the

@@ -57,6 +57,38 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     assert(got.as[String].collect().toSeq == Seq("dir-a", "dir-b", "dir-c"))
   }
 
+  test("synonym merge keeps the withColumn/drop fold's release-date chain (F2)") {
+    // "Original release" is both a canonical key and a variant of "Release
+    // date", so the result depends on SynonymMap's iteration order. The two
+    // "Release D/date" spellings only coexist under case-sensitive analysis.
+    def fold(df: org.apache.spark.sql.DataFrame) =
+      pipeline.MoviesEtl.SynonymMap.foldLeft(df) { case (d, (canon, variants)) =>
+        val present = (canon +: variants).filter(d.columns.contains).distinct
+        if (present.isEmpty) d
+        else d.withColumn(canon, coalesce(present.map(qcol): _*))
+          .drop(present.filterNot(_ == canon): _*)
+      }
+    val saved = spark.conf.get("spark.sql.caseSensitive")
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try {
+      val n = None: Option[String]
+      val df = Seq(("a", n, Some("R1"), n, n), ("b", Some("RD2"), Some("R2"), Some("O2"), Some("d2")),
+        ("c", Some("RD3"), n, n, n), ("d", n, Some("R4"), Some("O4"), n),
+        ("e", n, n, n, n), ("f", Some("RD6"), Some("R6"), n, n))
+        .toDF("title", "Release Date", "Released", "Original release", "Release date")
+      val got = Cleaning.mergeSynonyms(df, pipeline.MoviesEtl.SynonymMap)
+      val want = fold(df)
+      assert(got.columns.toSeq == want.columns.toSeq)
+      assert(got.collect().toSeq == want.collect().toSeq)
+      // "Release date" merges first and absorbs "Original release"; the
+      // later "Original release" entry re-creates it from the two others
+      assert(got.columns.toSeq == Seq("title", "Release date", "Original release"))
+      assert(got.as[(String, Option[String], Option[String])].collect().toSeq == Seq(
+        ("a", None, Some("R1")), ("b", Some("d2"), Some("RD2")), ("c", None, Some("RD3")),
+        ("d", Some("O4"), Some("R4")), ("e", None, None), ("f", None, Some("RD6"))))
+    } finally spark.conf.set("spark.sql.caseSensitive", saved)
+  }
+
   test("alt-title consolidation builds a non-null map (F1)") {
     val df = Seq(("t1", Some("aka"), None: Option[String]))
       .toDF("title", "Also known as", "French")
