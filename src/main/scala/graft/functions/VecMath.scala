@@ -316,10 +316,20 @@ case class LshBucketExpr(child: Expression, planes: Seq[Double], nPlanes: Int,
                          dim: Int) extends UnaryExpression {
   require(planes.length == nPlanes * dim,
     s"lsh_bucket: ${planes.length} plane weights != $nPlanes x $dim")
+  // bit p of the bucket is plane p's sign; bit 63 would make it negative
+  require(nPlanes <= 63, s"lsh_bucket: nPlanes $nPlanes > 63 overflows a bigint bucket")
 
   override def dataType: DataType = LongType
   override def nullable: Boolean = false
   override def prettyName: String = "lsh_bucket"
+
+  override def checkInputDataTypes() = child.dataType match {
+    case ArrayType(DoubleType, _) =>
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    case other =>
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"lsh_bucket needs array<double>, got ${other.catalogString}")
+  }
 
   @transient private lazy val planesArr: Array[Double] = planes.toArray
 

@@ -46,11 +46,6 @@ object CountMin {
       .agg(count(lit(1)).alias("cnt"))
   }
 
-  /** Merge same-shape sketch tables by adding cell counts. */
-  def cmsMerge(sketches: Seq[DataFrame]): DataFrame =
-    sketches.reduce(_ unionByName _)
-      .groupBy("d", "b").agg(sum("cnt").alias("cnt"))
-
   /** Point estimates for the probe items: min over the depth probed
     * cells (absent cell ⇒ 0 — the item was never seen). The probe set
     * is dimension-sized by contract; the sketch side is depth·width

@@ -28,11 +28,9 @@ object DatesNums {
     * challenge2.py:214). */
   def epochToTimestamp(c: Column): Column = timestamp_seconds(c)
 
-  /** E4 — pandas `to_numeric(errors='coerce')`: null on failure (requires
-    * spark.sql.ansi.enabled=false, which our sessions pin). */
-  def coerceDouble(c: Column): Column = c.cast("double")
-
-  /** E4 second half — coerce then fill (challenge2.py:196). */
+  /** E4 — pandas `to_numeric(errors='coerce')` then fill: null on failure
+    * (spark.sql.ansi.enabled=false, which our sessions pin), then `fill`
+    * (challenge2.py:196). */
   def coerceDoubleFill(c: Column, fill: Double = 0.0): Column =
     coalesce(c.cast("double"), lit(fill))
 

@@ -44,11 +44,6 @@ object Dedup {
       }: _*)
   }
 
-  /** C2 (relaxed) — arbitrary-row dedup where determinism is not needed;
-    * cheaper at scale (partial aggregation before shuffle). */
-  def dropDups(df: DataFrame, keys: Seq[String]): DataFrame =
-    df.dropDuplicates(keys)
-
   /** C3 — per-column null counts in ONE pass (challenge2.py:81).
     * Returns a single-row DataFrame, one column per input column. */
   def nullProfile(df: DataFrame, cols: Seq[String] = Nil): DataFrame = {
@@ -58,14 +53,27 @@ object Dedup {
 
   /** C4 — null-ratio column pruning: drop columns with >= `maxNullRatio`
     * nulls (the 90% rule, challenge2.py:81-82). Data-dependent projection:
-    * one aggregate pass, then a driver-side select of survivors. */
+    * one pass counting `isNullAt` per ordinal over the plan's internal
+    * rows, then a driver-side select of survivors in input order (an empty
+    * frame keeps every column). A `count(when(isNull))` aggregate per
+    * column has width + 1 fields; past `spark.sql.codegen.maxFields` (100;
+    * the movies wiki has 158 columns) whole-stage codegen turns off and
+    * every task regenerates the wide projection source, ~0.5 s for 1,758
+    * rows. `df.rdd`'s row encoder would do the same. */
   def pruneMostlyNullColumns(df: DataFrame, maxNullRatio: Double = 0.9): DataFrame = {
     val cs = df.columns.toSeq
-    val row = df.select(
-      (count(lit(1)).alias("__n") +: cs.map(c => count(when(qcol(c).isNull, 1)).alias(c))): _*
-    ).head()
-    val n = row.getLong(0).max(1L)
-    val keep = cs.filter(c => row.getLong(cs.indexOf(c) + 1).toDouble / n < maxNullRatio)
+    val width = cs.length
+    // nulls per ordinal, then the row count at index `width`
+    val counts = df.queryExecution.toRdd.treeAggregate(new Array[Long](width + 1))(
+      (acc, row) => {
+        var i = 0
+        while (i < width) { if (row.isNullAt(i)) acc(i) += 1; i += 1 }
+        acc(width) += 1
+        acc
+      },
+      (a, b) => { for (i <- a.indices) a(i) += b(i); a })
+    val n = counts(width).max(1L)
+    val keep = cs.zipWithIndex.collect { case (c, i) if counts(i).toDouble / n < maxNullRatio => c }
     df.select(keep.map(qcol): _*)
   }
 

@@ -51,15 +51,6 @@ object Filters {
   def matchesNeither(df: DataFrame, c: String, patterns: Seq[String]): DataFrame =
     df.filter(patterns.map(p => !col(c).rlike(p)).reduce(_ && _))
 
-  /** B6 — null-drop on a column subset (`Series.dropna()`,
-    * challenge2.py:85,164,182,191). */
-  def dropNulls(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.na.drop(cols)
-
-  /** B8 — drop columns (challenge2.py:162,180,200,204,233,239). */
-  def dropCols(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.drop(cols: _*)
-
   /** B9 — bulk rename (the 15-entry rename map, challenge2.py:254-269). */
   def rename(df: DataFrame, renames: Map[String, String]): DataFrame =
     df.withColumnsRenamed(renames)

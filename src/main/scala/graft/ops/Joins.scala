@@ -28,11 +28,6 @@ object Joins {
     l.join(r, on, "inner")
   }
 
-  /** G2 — left equi-join of an aggregate back onto the base table
-    * (ratings-counts join, challenge2.py:279). */
-  def leftJoin(left: DataFrame, right: DataFrame, on: Seq[String]): DataFrame =
-    left.join(right, on, "left")
-
   /** G3 — join-anomaly purge: delete rows matching a predicate
     * (the index-drop of challenge2.py:229-231 re-expressed as predicate
     * negation; SURVEY.md §2 J3). */

@@ -101,12 +101,6 @@ object ScaleDedup {
     }
   }
 
-  /** LSH band key: concat of the band's minhashes — docs sharing a band
-    * key are near-duplicate candidates. */
-  def bandKey(bandIdx: Int, rowsPerBand: Int): Column =
-    concat_ws("_",
-      (bandIdx * rowsPerBand until (bandIdx + 1) * rowsPerBand).map(i => col(s"mh_$i")): _*)
-
   /** Full MinHash-LSH candidate-pair pipeline: signature → bands →
     * oversized-bucket guard → self-join per band → distinct pairs
     * (id1 < id2). `df` must expose `idCol` and `textCol`.

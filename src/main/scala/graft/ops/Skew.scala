@@ -80,8 +80,4 @@ object Skew {
         round(col("max_cnt") / (col("n_rows").cast("double") / col("n_keys")), 6)
           .alias("skew"))
   }
-
-  def sortedLayout(df: DataFrame, n: Int, by: Seq[String]): DataFrame =
-    df.repartitionByRange(n, by.map(qcol): _*)
-      .sortWithinPartitions(by.map(qcol): _*)
 }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import java.util.Properties
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -47,32 +48,40 @@ class JdbcSinkSpec extends AnyFunSuite with SparkSpec {
     assert(spark.read.jdbc(url, "t_replace", props).count() === 100)
   }
 
-  test("A7 chunked append opens one connection per partition and " +
-      "flushes ceil(rows/part/batchSize) batches per partition") {
+  private def counted1000 = {
     import spark.implicits._
-    CountingJdbc.reset()
-    // 1000 rows over 4 partitions at batchSize 100 → 250 rows/partition
-    // → 3 executeBatch flushes each (100+100+50): multiple batches per
-    // partition, the chunk-loop shape challenge2.py:295-298 runs.
-    val rows = (1L to 1000L).map(i => (i, s"n_$i", i * 0.25))
-      .toDF("id", "name", "score")
-    // create through the PLAIN url so Derby's dialect owns the DDL types;
-    // the counting prefix would fall back to the generic dialect's TEXT.
-    // The append path below issues no DDL, only batched INSERTs.
-    IO.writeJdbcReplace(rows.limit(0), url, "t_counted", props)
+    (1L to 1000L).map(i => (i, s"n_$i", i * 0.25)).toDF("id", "name", "score")
+  }
+
+  /** Creates `table` empty through the PLAIN url, so Derby's dialect owns
+    * the DDL types (the counting prefix would fall back to the generic
+    * dialect's TEXT; appends issue no DDL, only batched INSERTs). Returns
+    * the counting url and props, and the fixed driver-side connection
+    * overhead of an append (tableExists probe etc.), calibrated with a
+    * small SINGLE-partition append to a scratch table: total minus the one
+    * partition writer. (An empty append won't do — AQE plans zero write
+    * tasks for it.) Counters are reset on return. */
+  private def countingTarget(rows: DataFrame, table: String): (String, Properties, Int) = {
+    IO.writeJdbcReplace(rows.limit(0), url, table, props)
     val curl = CountingJdbc.Prefix + url
     val cprops = props
     cprops.setProperty("driver", classOf[CountingDerbyDriver].getName)
-    // calibrate the fixed driver-side connection overhead (tableExists
-    // probe etc.) with a small SINGLE-partition append to a scratch
-    // table: total minus the one partition writer = overhead. (An empty
-    // append won't do — AQE plans zero write tasks for it.)
     IO.writeJdbcReplace(rows.limit(0), url, "t_cal", props)
     CountingJdbc.reset()
     IO.writeJdbcAppend(rows.limit(10), curl, "t_cal", numPartitions = 1,
       batchSize = 100, props = cprops)
     val overhead = CountingJdbc.connects.get() - 1
     CountingJdbc.reset()
+    (curl, cprops, overhead)
+  }
+
+  test("A7 chunked append opens one connection per partition and " +
+      "flushes ceil(rows/part/batchSize) batches per partition") {
+    // 1000 rows over 4 partitions at batchSize 100 → 250 rows/partition
+    // → 3 executeBatch flushes each (100+100+50): multiple batches per
+    // partition, the chunk-loop shape challenge2.py:295-298 runs.
+    val rows = counted1000
+    val (curl, cprops, overhead) = countingTarget(rows, "t_counted")
     IO.writeJdbcAppend(rows, curl, "t_counted", numPartitions = 4,
       batchSize = 100, props = cprops)
     // exactly one executor connection per partition beyond the fixed
@@ -82,6 +91,27 @@ class JdbcSinkSpec extends AnyFunSuite with SparkSpec {
     assert(CountingJdbc.batches.get() === 12,
       s"expected 4 partitions x 3 flushes, got ${CountingJdbc.batches.get()}")
     assert(spark.read.jdbc(url, "t_counted", props).count() === 1000)
+  }
+
+  test("A7 numPartitions caps the writers and never fans a small input out") {
+    val rows = counted1000
+    val (curl, cprops, overhead) = countingTarget(rows, "t_capped")
+    // one input partition under the default cap of 8: one writer, 10 flushes
+    IO.writeJdbcAppend(rows.coalesce(1), curl, "t_capped", batchSize = 100, props = cprops)
+    assert(CountingJdbc.connects.get() === 1 + overhead,
+      s"connects=${CountingJdbc.connects.get()} overhead=$overhead")
+    assert(CountingJdbc.batches.get() === 10)
+    assert(spark.read.jdbc(url, "t_capped", props).count() === 1000)
+    // six input partitions under a cap of 2: two writers, every row loaded
+    val six = rows.repartition(6)
+    assert(six.rdd.getNumPartitions === 6)
+    CountingJdbc.reset()
+    IO.writeJdbcAppend(six, curl, "t_capped", numPartitions = 2, batchSize = 100, props = cprops)
+    assert(CountingJdbc.connects.get() === 2 + overhead,
+      s"connects=${CountingJdbc.connects.get()} overhead=$overhead")
+    val back = spark.read.jdbc(url, "t_capped", props)
+    assert(back.count() === 2000)
+    assert(back.groupBy("id").count().filter(col("count") =!= 2).count() === 0)
   }
 
   test("A7 writeJdbcAppend accumulates partitioned batched chunks") {

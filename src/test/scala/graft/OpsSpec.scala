@@ -38,6 +38,64 @@ class OpsSpec extends AnyFunSuite with SparkSpec {
     assert(keptLoose == Seq("id", "mostly_null"))
   }
 
+  test("null-ratio pruning keeps the per-column count aggregate's survivors (C4)") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types._
+    // the one-aggregate form the per-ordinal pass replaced
+    def aggregateForm(df: DataFrame, maxNullRatio: Double): DataFrame = {
+      val cs = df.columns.toSeq
+      val row = df.select(
+        (count(lit(1)).alias("__n") +: cs.map(c => count(when(qcol(c).isNull, 1)).alias(c))): _*
+      ).head()
+      val n = row.getLong(0).max(1L)
+      val keep = cs.filter(c => row.getLong(cs.indexOf(c) + 1).toDouble / n < maxNullRatio)
+      df.select(keep.map(qcol): _*)
+    }
+    // 123 columns (past spark.sql.codegen.maxFields) cycling string, map,
+    // array and int; column j is null in exactly j % 41 of the 40 rows,
+    // spread over all 4 partitions: 0%..100% null, with 36/40 = 90% exact
+    val nRows = 40
+    val width = 123
+    val schema = StructType((0 until width).map { j =>
+      val t = j % 4 match {
+        case 0 => StringType
+        case 1 => MapType(StringType, IntegerType)
+        case 2 => ArrayType(IntegerType)
+        case _ => IntegerType
+      }
+      StructField(if (j == 7) "dotted.c7" else s"c$j", t)
+    })
+    val rows = (0 until nRows).map { r =>
+      Row((0 until width).map { j =>
+        if ((r + j) % nRows < j % 41) null
+        else j % 4 match {
+          case 0 => s"s$r"
+          case 1 => Map("k" -> r)
+          case 2 => Seq(r, j)
+          case _ => r
+        }
+      }: _*)
+    }
+    val wide = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+    assert(wide.queryExecution.toRdd.getNumPartitions == 4)
+    for (ratio <- Seq(0.9, 0.5, 1.0, 0.0)) {
+      val got = Dedup.pruneMostlyNullColumns(wide, ratio)
+      val want = aggregateForm(wide, ratio)
+      assert(got.columns.toSeq == want.columns.toSeq, s"ratio $ratio")
+      assert(got.collect().toSeq == want.collect().toSeq, s"ratio $ratio")
+    }
+    // the 90% boundary: 36/40 null is pruned, 35/40 is kept
+    val kept90 = Dedup.pruneMostlyNullColumns(wide, 0.9).columns.toSet
+    assert(!kept90.contains("c36") && kept90.contains("c35") && kept90.contains("dotted.c7"))
+    assert(kept90.size == 3 * 36)
+    // an empty frame keeps every column, with and without partitions
+    for (empty <- Seq(wide.filter(lit(false)),
+                      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))) {
+      assert(Dedup.pruneMostlyNullColumns(empty, 0.9).columns.toSeq == wide.columns.toSeq)
+      assert(aggregateForm(empty, 0.9).columns.toSeq == wide.columns.toSeq)
+    }
+  }
+
   test("existence filter handles dotted column names (No. of episodes)") {
     val df = Seq(("m1", Some("link"), None: Option[Int]),
       ("tv", Some("link"), Some(12)),

@@ -134,6 +134,20 @@ class VecMathSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("lsh_bucket rejects non-array<double> input at analysis time") {
+    import spark.implicits._
+    val df = Seq(("a", Seq(1, 2), Seq(1.0f, 2.0f))).toDF("s", "ints", "floats")
+    for (c <- Seq("s", "ints", "floats")) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        df.select(Similarity.lshBucket(col(c), 2, 2))
+      }
+      assert(e.getMessage.contains("lsh_bucket needs array<double>"), e.getMessage)
+    }
+    // bit 63 is the sign bit of the bigint bucket
+    intercept[IllegalArgumentException](Similarity.lshBucket(col("v"), 1, 64))
+    Similarity.lshBucket(col("v"), 1, 63)
+  }
+
   private val centsT = ArrayType(StructType(Seq(
     StructField("cid", LongType), StructField("cv", arrT))), containsNull = true)
 
