@@ -430,7 +430,7 @@ object PortableMathSql {
   }
 
   /** Exact integer bit-chunking of a bounded double column — the SQL
-    * mirror of SparkEntry.bitChunks (hi = floor(v) plus three 27-bit
+    * mirror of PortableMath.bitChunks (hi = floor(v) plus three 27-bit
     * fraction chunks, every step IEEE-exact): emits `{p}hi`, `{p}c1`,
     * `{p}c2`, `{p}c3` (DOUBLE-typed integers; CAST to BIGINT at the
     * consuming aggregate). */

@@ -4231,8 +4231,8 @@ object Stats {
     * lost (bounds: Σr² < n·2^40, fine to ~8e6 subjects — a diagnostic
     * probe's domain, not a corpus op's). Every per-row part (lo < 2^30,
     * the split, the products) is IEEE-exact in double on both engines.
-    * Oracle twin: SparkEntry.coxDiagXOracle / coxDiagXCovOracle —
-    * column-for-column. */
+    * These probes have no registered query or oracle; StatsSpec covers
+    * them. */
   private def coxCovDigestCols: Seq[Column] = {
     val P = graft.functions.PortableMath
     val lo = P.loPart(col("__x"), 1e9)

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.queries.Q
 
 /** The 22 TPC-H queries (public spec, tpc.org) adapted to the driver's
   * trimmed fixture schema (TESTDATA.md). The fixtures lack `partsupp`
@@ -103,7 +104,7 @@ object Tpch {
       .join(cust, col("o_custkey") === col("c_custkey"))
       .groupBy("l_orderkey", "o_orderdate")
       .agg(sum(revenueExpr).cast("double").alias("revenue"))
-      // DATE output, not raw timestamp (round 17): o_orderdate is
+      // DATE output, not raw timestamp: o_orderdate is
       // midnight-valued, so the cast is bijective — and a raw
       // TimestampType output rides parquet as timestamp[ns] against the
       // oracle's timestamp[us], the wire-representation hazard class
@@ -399,7 +400,7 @@ object Tpch {
       .join(big, col("o_orderkey") === col("__ok"))
       .join(Tables.customer(s, d).select("c_custkey", "c_name"),
         col("o_custkey") === col("c_custkey"))
-      // DATE output (round 17) — see q3's note; the tiebreak sort then
+      // DATE output — see q3's note; the tiebreak sort then
       // runs on the date, order-identical since the cast is bijective
       // over midnight-valued timestamps
       .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
@@ -494,24 +495,13 @@ object Tpch {
       .orderBy("c_nationkey")
   }
 
-  /** Driver-contract query map (merged into SparkEntry.queries). */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_tpch1"  -> q1 _,  "q_tpch2"  -> q2 _,  "q_tpch3"  -> q3 _,
-    "q_tpch4"  -> q4 _,  "q_tpch5"  -> q5 _,  "q_tpch6"  -> q6 _,
-    "q_tpch7"  -> q7 _,  "q_tpch8"  -> q8 _,  "q_tpch9"  -> q9 _,
-    "q_tpch10" -> q10 _, "q_tpch11" -> q11 _, "q_tpch12" -> q12 _,
-    "q_tpch13" -> q13 _, "q_tpch14" -> q14 _, "q_tpch15" -> q15 _,
-    "q_tpch16" -> q16 _, "q_tpch17" -> q17 _, "q_tpch18" -> q18 _,
-    "q_tpch19" -> q19 _, "q_tpch20" -> q20 _, "q_tpch21" -> q21 _,
-    "q_tpch22" -> q22 _)
-
   private def rev(e: String = "l_extendedprice * (1 - l_discount)") =
     s"CAST(SUM(CAST($e AS DECIMAL(18,6))) AS DOUBLE)"
 
-  /** DuckDB oracle mirrors (merged into SparkEntry.oracleSql). */
-  def oracleSql: Map[String, String] = Map(
-    "q_tpch1" ->
-      ("SELECT l_returnflag, l_linestatus, " +
+  /** The 22 queries with their DuckDB oracle mirrors. */
+  val all: Seq[Q] = Seq(
+    Q("q_tpch1", q1,
+      "SELECT l_returnflag, l_linestatus, " +
         "CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty, " +
         "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price, " +
         rev() + " AS sum_disc_price, " +
@@ -523,8 +513,8 @@ object Tpch {
         "FROM lineitem WHERE l_shipdate <= TIMESTAMP '2001-09-02' " +
         "GROUP BY 1, 2 ORDER BY 1, 2"),
 
-    "q_tpch2" ->
-      ("WITH pairs AS (SELECT DISTINCT p_partkey, l_suppkey FROM lineitem " +
+    Q("q_tpch2", q2,
+      "WITH pairs AS (SELECT DISTINCT p_partkey, l_suppkey FROM lineitem " +
         "JOIN part ON l_partkey = p_partkey WHERE p_size = 15 AND p_type = 'STANDARD'), " +
         "sn AS (SELECT s_suppkey, s_name, s_acctbal, n_name FROM supplier " +
         "JOIN nation ON s_nationkey = n_nationkey " +
@@ -535,12 +525,12 @@ object Tpch {
         "SELECT s_acctbal, s_name, n_name, p_partkey FROM ranked WHERE rn = 1 " +
         "ORDER BY s_acctbal DESC, p_partkey LIMIT 100"),
 
-    "q_tpch3" ->
-      // o_orderdate emitted as DATE (round 17): mirrors the Spark side —
+    Q("q_tpch3", q3,
+      // o_orderdate emitted as DATE: mirrors the Spark side —
       // a raw timestamp output is the timestamp[ns]-vs-[us] wire hazard
       // class; the cast is bijective (midnight-valued) and sits OUTSIDE
       // the group key, so values and grouping are unchanged.
-      ("SELECT l_orderkey, " + rev() + " AS revenue, " +
+      "SELECT l_orderkey, " + rev() + " AS revenue, " +
         "CAST(o_orderdate AS DATE) AS o_orderdate " +
         "FROM customer JOIN orders ON c_custkey = o_custkey " +
         "JOIN lineitem ON l_orderkey = o_orderkey " +
@@ -549,15 +539,15 @@ object Tpch {
         "GROUP BY l_orderkey, orders.o_orderdate " +
         "ORDER BY revenue DESC, l_orderkey LIMIT 10"),
 
-    "q_tpch4" ->
-      ("SELECT o_orderpriority, count(*) AS order_count FROM orders " +
+    Q("q_tpch4", q4,
+      "SELECT o_orderpriority, count(*) AS order_count FROM orders " +
         "WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1997-04-01' " +
         "AND EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey " +
         "AND l_shipdate > o_orderdate + INTERVAL 90 DAY) " +
         "GROUP BY 1 ORDER BY 1"),
 
-    "q_tpch5" ->
-      ("SELECT n_name, " + rev() + " AS revenue " +
+    Q("q_tpch5", q5,
+      "SELECT n_name, " + rev() + " AS revenue " +
         "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
         "JOIN customer ON o_custkey = c_custkey " +
         "JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey " +
@@ -567,14 +557,14 @@ object Tpch {
         "AND o_orderdate < TIMESTAMP '1998-01-01' " +
         "GROUP BY 1 ORDER BY revenue DESC, n_name"),
 
-    "q_tpch6" ->
-      ("SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))) AS DOUBLE) AS revenue " +
+    Q("q_tpch6", q6,
+      "SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))) AS DOUBLE) AS revenue " +
         "FROM lineitem WHERE l_shipdate >= TIMESTAMP '1997-01-01' " +
         "AND l_shipdate < TIMESTAMP '1998-01-01' " +
         "AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24"),
 
-    "q_tpch7" ->
-      ("SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation, " +
+    Q("q_tpch7", q7,
+      "SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation, " +
         "CAST(date_part('year', l_shipdate) AS INT) AS l_year, " + rev() + " AS revenue " +
         "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
         "JOIN customer ON o_custkey = c_custkey " +
@@ -586,8 +576,8 @@ object Tpch {
         "OR (sn.n_name = 'NATION_2' AND cn.n_name = 'NATION_1')) " +
         "GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"),
 
-    "q_tpch8" ->
-      ("WITH v AS (SELECT CAST(date_part('year', o_orderdate) AS INT) AS o_year, " +
+    Q("q_tpch8", q8,
+      "WITH v AS (SELECT CAST(date_part('year', o_orderdate) AS INT) AS o_year, " +
         "CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6)) AS vol, sn.n_name AS supp_nation " +
         "FROM lineitem JOIN part ON l_partkey = p_partkey " +
         "JOIN orders ON l_orderkey = o_orderkey " +
@@ -601,8 +591,8 @@ object Tpch {
         "SELECT o_year, round(CAST(SUM(CASE WHEN supp_nation = 'NATION_1' THEN vol ELSE 0 END) AS DOUBLE) " +
         "/ CAST(SUM(vol) AS DOUBLE), 6) AS mkt_share FROM v GROUP BY 1 ORDER BY 1"),
 
-    "q_tpch9" ->
-      ("SELECT n_name AS nation, CAST(date_part('year', o_orderdate) AS INT) AS o_year, " +
+    Q("q_tpch9", q9,
+      "SELECT n_name AS nation, CAST(date_part('year', o_orderdate) AS INT) AS o_year, " +
         "CAST(SUM(CAST(l_extendedprice * (1 - l_discount) - 0.7 * p_retailprice * l_quantity " +
         "AS DECIMAL(18,6))) AS DOUBLE) AS sum_profit " +
         "FROM lineitem JOIN part ON l_partkey = p_partkey " +
@@ -612,8 +602,8 @@ object Tpch {
         "WHERE p_name LIKE '%red%' " +
         "GROUP BY 1, 2 ORDER BY nation, o_year DESC"),
 
-    "q_tpch10" ->
-      ("SELECT c_custkey, c_name, " + rev() + " AS revenue, c_acctbal, n_name " +
+    Q("q_tpch10", q10,
+      "SELECT c_custkey, c_name, " + rev() + " AS revenue, c_acctbal, n_name " +
         "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
         "JOIN customer ON o_custkey = c_custkey " +
         "JOIN nation ON c_nationkey = n_nationkey " +
@@ -622,16 +612,16 @@ object Tpch {
         "GROUP BY c_custkey, c_name, c_acctbal, n_name " +
         "ORDER BY revenue DESC, c_custkey LIMIT 20"),
 
-    "q_tpch11" ->
-      ("WITH v AS (SELECT p_partkey, SUM(CAST(l_quantity * p_retailprice AS DECIMAL(18,2))) AS val " +
+    Q("q_tpch11", q11,
+      "WITH v AS (SELECT p_partkey, SUM(CAST(l_quantity * p_retailprice AS DECIMAL(18,2))) AS val " +
         "FROM lineitem JOIN supplier ON l_suppkey = s_suppkey " +
         "JOIN part ON l_partkey = p_partkey WHERE s_nationkey = 5 GROUP BY 1) " +
         "SELECT p_partkey, CAST(val AS DOUBLE) AS value FROM v " +
         "WHERE CAST(val AS DOUBLE) > 0.002 * (SELECT CAST(SUM(val) AS DOUBLE) FROM v) " +
         "ORDER BY value DESC, p_partkey"),
 
-    "q_tpch12" ->
-      ("SELECT CASE WHEN l_shipdate > o_orderdate + INTERVAL 180 DAY THEN 'LATE' ELSE 'ONTIME' END " +
+    Q("q_tpch12", q12,
+      "SELECT CASE WHEN l_shipdate > o_orderdate + INTERVAL 180 DAY THEN 'LATE' ELSE 'ONTIME' END " +
         "AS ship_bucket, " +
         "CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count, " +
         "CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count " +
@@ -639,28 +629,28 @@ object Tpch {
         "WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01' " +
         "GROUP BY 1 ORDER BY 1"),
 
-    "q_tpch13" ->
-      ("SELECT c_count, count(*) AS custdist FROM (" +
+    Q("q_tpch13", q13,
+      "SELECT c_count, count(*) AS custdist FROM (" +
         "SELECT c_custkey, count(o_orderkey) AS c_count FROM customer " +
         "LEFT JOIN orders ON c_custkey = o_custkey AND o_orderpriority <> '5-LOW' " +
         "GROUP BY c_custkey) GROUP BY c_count ORDER BY custdist DESC, c_count DESC"),
 
-    "q_tpch14" ->
-      ("SELECT round(100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO' " +
+    Q("q_tpch14", q14,
+      "SELECT round(100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO' " +
         "THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6)) ELSE 0 END) AS DOUBLE) " +
         "/ " + rev() + ", 6) AS promo_revenue " +
         "FROM lineitem JOIN part ON l_partkey = p_partkey " +
         "WHERE l_shipdate >= TIMESTAMP '1997-09-01' AND l_shipdate < TIMESTAMP '1997-10-01'"),
 
-    "q_tpch15" ->
-      ("WITH rev AS (SELECT l_suppkey, " + rev() + " AS total_revenue FROM lineitem " +
+    Q("q_tpch15", q15,
+      "WITH rev AS (SELECT l_suppkey, " + rev() + " AS total_revenue FROM lineitem " +
         "WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-04-01' " +
         "GROUP BY 1) " +
         "SELECT s_suppkey, s_name, total_revenue FROM rev JOIN supplier ON l_suppkey = s_suppkey " +
         "WHERE total_revenue = (SELECT max(total_revenue) FROM rev) ORDER BY s_suppkey"),
 
-    "q_tpch16" ->
-      ("SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt " +
+    Q("q_tpch16", q16,
+      "SELECT p_brand, p_type, p_size, count(DISTINCT l_suppkey) AS supplier_cnt " +
         "FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) " +
         "JOIN part ON l_partkey = p_partkey " +
         "WHERE p_brand <> 'Brand#5' AND p_type <> 'PROMO' " +
@@ -668,19 +658,19 @@ object Tpch {
         "AND l_suppkey IN (SELECT s_suppkey FROM supplier WHERE s_acctbal >= 0) " +
         "GROUP BY 1, 2, 3 ORDER BY supplier_cnt DESC, p_brand, p_type, p_size"),
 
-    "q_tpch17" ->
-      ("WITH li AS (SELECT p_partkey, l_quantity, l_extendedprice FROM lineitem " +
+    Q("q_tpch17", q17,
+      "WITH li AS (SELECT p_partkey, l_quantity, l_extendedprice FROM lineitem " +
         "JOIN part ON l_partkey = p_partkey WHERE p_brand = 'Brand#3' AND p_size < 10), " +
         "av AS (SELECT p_partkey AS pk, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) " +
         "/ count(*) AS avg_q FROM li GROUP BY 1) " +
         "SELECT round(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) / 7.0, 6) " +
         "AS avg_yearly FROM li JOIN av ON p_partkey = pk WHERE l_quantity < 0.2 * avg_q"),
 
-    "q_tpch18" ->
-      ("WITH big AS (SELECT l_orderkey, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) " +
+    Q("q_tpch18", q18,
+      "WITH big AS (SELECT l_orderkey, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) " +
         "AS sum_qty FROM lineitem GROUP BY 1 HAVING sum_qty > 250) " +
         // DATE output + date-typed tiebreak, mirroring the Spark side
-        // (round 17; bijective over midnight-valued timestamps)
+        // (bijective over midnight-valued timestamps)
         "SELECT c_name, c_custkey, o_orderkey, " +
         "CAST(o_orderdate AS DATE) AS o_orderdate, o_totalprice, sum_qty " +
         "FROM big JOIN orders ON o_orderkey = l_orderkey " +
@@ -688,14 +678,14 @@ object Tpch {
         "ORDER BY o_totalprice DESC, CAST(o_orderdate AS DATE), o_orderkey " +
         "LIMIT 100"),
 
-    "q_tpch19" ->
-      ("SELECT " + rev() + " AS revenue FROM lineitem JOIN part ON l_partkey = p_partkey " +
+    Q("q_tpch19", q19,
+      "SELECT " + rev() + " AS revenue FROM lineitem JOIN part ON l_partkey = p_partkey " +
         "WHERE (p_brand = 'Brand#11' AND p_size BETWEEN 1 AND 5 AND l_quantity BETWEEN 1 AND 11) " +
         "OR (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 10 AND l_quantity BETWEEN 10 AND 20) " +
         "OR (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 20 AND 30)"),
 
-    "q_tpch20" ->
-      ("SELECT s_name, s_acctbal FROM supplier " +
+    Q("q_tpch20", q20,
+      "SELECT s_name, s_acctbal FROM supplier " +
         "JOIN nation ON s_nationkey = n_nationkey " +
         "JOIN region ON n_regionkey = r_regionkey " +
         "WHERE r_name = 'EUROPE' AND s_suppkey IN (" +
@@ -705,8 +695,8 @@ object Tpch {
         "GROUP BY 1 HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) > 50) " +
         "ORDER BY s_name"),
 
-    "q_tpch21" ->
-      ("WITH ls AS (SELECT l_orderkey, l_suppkey, " +
+    Q("q_tpch21", q21,
+      "WITH ls AS (SELECT l_orderkey, l_suppkey, " +
         "max(CASE WHEN l_shipdate > o_orderdate + INTERVAL 90 DAY THEN 1 ELSE 0 END) AS late " +
         "FROM lineitem JOIN orders ON l_orderkey = o_orderkey " +
         "WHERE o_orderstatus = 'F' GROUP BY 1, 2), " +
@@ -716,8 +706,8 @@ object Tpch {
         "WHERE ls.late = 1 AND agg.n_supp >= 2 AND agg.n_late = 1 " +
         "GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 20"),
 
-    "q_tpch22" ->
-      ("SELECT c_nationkey, count(*) AS numcust, " +
+    Q("q_tpch22", q22,
+      "SELECT c_nationkey, count(*) AS numcust, " +
         "CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal " +
         "FROM customer WHERE c_nationkey BETWEEN 1 AND 7 " +
         "AND c_acctbal > (SELECT CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) / count(*) " +

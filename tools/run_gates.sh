@@ -27,7 +27,7 @@ check() { # exit-code gate-name
 # DECIMAL<->DOUBLE cast class that burned rounds 10-12 (round-12 VERDICT
 # next-round #5). A new site must be ported to the portable machinery
 # or consciously re-baselined before the sweep is worth running.
-for lint in lint_round0 lint_transcendental lint_round_casts lint_dupkeys \
+for lint in lint_round0 lint_transcendental lint_round_casts \
             selfcheck_selftest; do
   log "$lint"
   python3 "tools/$lint.py" > "$OUT/$lint.log" 2>&1
